@@ -22,11 +22,17 @@ Spark's public DataSource V2 Python API:
   zeros (TRIM_HORIZON, `KinesisSubscriberActor.scala:193`) or the current
   tip (LATEST); Structured Streaming's checkpoint persists the offsets —
   the DynamoDB lease-table analogue (R17) — so a restarted query resumes
-  where it left off.
+  where it left off. The stream reader is a simple stream reader: each
+  micro-batch is read on the driver, while Spark asks for the latest
+  offset, and reaches the JVM as one prefetched block with the batch plan,
+  so a steady-state micro-batch starts no Python worker task. Only the
+  replay of an uncommitted batch after a restart reads in a worker task.
 
-Scale note: one input partition per shard is exactly Kinesis's
-parallelism model; resharding = more shard dirs. Record files are read
-sequentially per shard — the per-shard order IS the contract.
+Scale note: a batch read keeps one input partition per shard, exactly
+Kinesis's parallelism model; resharding = more shard dirs. A stream read
+funnels every shard through the driver's one source process, which suits
+a micro-batch of thousands of records, not a firehose. Record files are
+read sequentially per shard — the per-shard order IS the contract.
 """
 
 from __future__ import annotations
@@ -39,9 +45,9 @@ from collections.abc import Iterator
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     DataSourceWriter,
     InputPartition,
+    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
@@ -140,13 +146,16 @@ def _shards_of(stream_dir: str) -> list[str]:
 def _read_shard(
     stream_dir: str, shard: str, start: int, end: int | None
 ) -> Iterator[tuple]:
-    """Rows of one shard with sequence numbers in [start, end)."""
+    """Rows of one shard with sequence numbers in [start, end); with
+    ``end=None``, up to the last complete line."""
     path = os.path.join(stream_dir, shard, "records.jsonl")
     if not os.path.exists(path):
         return
     with open(path) as f:
         seq = 0
         for ln in f:
+            if not ln.endswith("\n"):
+                break  # the tail of a put still being appended
             if not ln.strip():
                 continue
             if seq >= start and (end is None or seq < end):
@@ -181,34 +190,33 @@ class _BatchReader(DataSourceReader):
         )
 
 
-class _StreamReader(DataSourceStreamReader):
+class _StreamReader(SimpleDataSourceStreamReader):
     """Per-shard sequence offsets, checkpoint-persisted by Spark (R17).
+
+    A simple stream reader: Spark's long-lived source runner on the driver
+    calls ``read(start)`` from ``latestOffset``, caches the rows and hands
+    them to the JVM with the batch plan, so a steady-state micro-batch
+    starts no Python read task. A restart that replays an uncommitted
+    offset-log batch finds that cache empty and re-reads the batch through
+    ``readBetweenOffsets`` in a worker.
 
     ``drain_parents_first=true`` enforces the KCL lease-ordering rule
     across a reshard: a child shard's records are withheld from a
     micro-batch until every parent shard (shards.json lineage) has been
-    fully SCHEDULED into an earlier micro-batch. Micro-batches execute
-    strictly serially, so scheduled-earlier implies processed-earlier —
-    no child record is consumed before any parent record, preserving
-    per-key order across a SplitShard/MergeShards boundary (one key's
-    records live in exactly one parent and one child). Intended for
-    TRIM_HORIZON replay consumes of a resharded stream — default off,
-    since it staggers child data into later micro-batches.
+    read to its tip in an earlier micro-batch. Micro-batches execute
+    strictly serially, so read-earlier implies processed-earlier — no
+    child record is consumed before any parent record, preserving per-key
+    order across a SplitShard/MergeShards boundary (one key's records live
+    in exactly one parent and one child). Intended for TRIM_HORIZON replay
+    consumes of a resharded stream — default off, since it staggers child
+    data into later micro-batches.
 
-    Offset-safety invariant: ``latestOffset`` must never return an offset
-    below what Spark has already committed, or the offset log records a
-    regressed end and a later micro-batch re-delivers processed records.
-    The scheduling history lives in ``_scheduled``, floored from every
-    offset Spark hands back: ``partitions(start, end)`` during planning,
-    and ``commit(end)`` after each batch (the durable lease-table analogue
-    is Spark's checkpoint, so its offsets are the authority). This makes a
-    restart safe without any persisted reader state: MicroBatchExecution
-    always re-plans the last offset-log batch via ``partitions(start, end)``
-    BEFORE the first ``latestOffset`` of a restarted run (observed protocol,
-    Spark 4.1), so every shard with committed progress floors the gate
-    first, and a held child is returned at its floored position — never
-    below the checkpoint. On a genuinely fresh query ``latestOffset`` runs
-    first with an empty floor, where holding children at 0 is correct.
+    Restart safety comes from ``read(start)`` alone: ``start`` is always
+    the last planned end — ``initialOffset`` on a fresh query, the
+    re-planned or committed batch's end on a restart — and every shard's
+    end is either its tip or, while held, ``start`` itself, so no end
+    offset ever falls below what Spark has recorded. No reader state
+    survives between calls.
     """
 
     def __init__(self, options):
@@ -224,27 +232,6 @@ class _StreamReader(DataSourceStreamReader):
         self.drain_parents_first = (
             options.get("drain_parents_first", "false").lower() == "true"
         )
-        #: Shard → highest offset known scheduled/committed: floored from
-        #: our own latestOffset answers AND every offset Spark passes back
-        #: (parents count as drained only once scheduled to their tip).
-        self._scheduled: dict[str, int] = {}
-
-    def _floor_scheduled(self, offsets: dict) -> None:
-        # Zero offsets MUST be recorded too: `_scheduled` non-emptiness is
-        # the fresh-vs-seen sentinel for the LATEST fast path below, and a
-        # query whose only known offsets are zeros (LATEST start on an
-        # empty stream, or a restart re-planning an all-zero batch) has
-        # been seen — skipping zeros would re-take the ungated fresh
-        # branch after a reshard and break parent-first ordering.
-        for shard, off in offsets.items():
-            if shard not in self._scheduled or int(off) > self._scheduled[shard]:
-                self._scheduled[shard] = int(off)
-
-    def _tips(self) -> dict[str, int]:
-        return {
-            s: _count_records(os.path.join(self.stream_dir, s, "records.jsonl"))
-            for s in _shards_of(self.stream_dir)
-        }
 
     def _lineage(self) -> dict[str, list[str]]:
         try:
@@ -253,69 +240,35 @@ class _StreamReader(DataSourceStreamReader):
             return {}  # never resharded → no lineage to honor
 
     def initialOffset(self) -> dict:
+        shards = _shards_of(self.stream_dir)
         if self.starting == "LATEST":
-            off = self._tips()
-        else:
-            off = {s: 0 for s in _shards_of(self.stream_dir)}
-        # Seed scheduling history: a LATEST start treats everything before
-        # the tip as already consumed, so gating must not hold children
-        # below it (that would regress the start offset).
-        self._floor_scheduled(off)
-        return off
+            return {
+                s: _count_records(os.path.join(self.stream_dir, s, "records.jsonl"))
+                for s in shards
+            }
+        return {s: 0 for s in shards}
 
-    def latestOffset(self) -> dict:
-        tips = self._tips()
-        if not self.drain_parents_first:
-            return tips
-        if self.starting == "LATEST" and not self._scheduled:
-            # First call of a fresh LATEST query (latestOffset precedes
-            # initialOffset in the planning protocol): the whole backlog —
-            # parents included — is skipped, so there is nothing to drain
-            # and holding children at 0 would regress below the tip-valued
-            # initial offset. A restarted reader never takes this branch:
-            # its floor is already seeded by the partitions() re-plan.
-            self._floor_scheduled(tips)
-            return tips
-        lineage = self._lineage()
-        out: dict[str, int] = {}
-        for shard, tip in tips.items():
-            undrained = [
-                p
-                for p in lineage.get(shard, [])
-                if p in tips and self._scheduled.get(p, 0) < tips[p]
-            ]
-            # Hold a child at its already-scheduled position until every
-            # parent has been scheduled to its tip (in an earlier batch).
-            out[shard] = self._scheduled.get(shard, 0) if undrained else tip
-        self._floor_scheduled(out)
-        return out
+    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
+        lo = {s: int(start.get(s, 0)) for s in _shards_of(self.stream_dir)}
+        rows = {s: list(_read_shard(self.stream_dir, s, lo[s], None)) for s in lo}
+        tips = {s: lo[s] + len(rows[s]) for s in lo}
+        end = dict(tips)
+        if self.drain_parents_first:
+            lineage = self._lineage()
+            for shard in lo:
+                if any(p in lo and lo[p] < tips[p] for p in lineage.get(shard, [])):
+                    # Hold the child at start until every parent has been
+                    # read to its tip in an earlier batch.
+                    end[shard] = lo[shard]
+                    rows[shard] = []
+        # A list iterator: the runner copies cached iterators on replay.
+        return iter([r for s in lo for r in rows[s]]), end
 
-    def partitions(self, start: dict, end: dict):
-        # Both bounds are scheduled state by definition (this batch is being
-        # planned now); on a restart this re-plan of the last offset-log
-        # batch is where the reader first learns the checkpointed offsets.
-        self._floor_scheduled(start)
-        self._floor_scheduled(end)
-        parts = []
-        for shard, tip in end.items():
-            lo = int(start.get(shard, 0))
-            if tip > lo:
-                parts.append(_ShardPartition(shard, lo, int(tip)))
-        return parts or [_ShardPartition(_shard_name(0), 0, 0)]
-
-    def read(self, partition: _ShardPartition):
-        yield from _read_shard(
-            self.stream_dir, partition.shard, partition.start, partition.end
-        )
-
-    def commit(self, end: dict) -> None:
-        # Progress lives in the Structured Streaming checkpoint (R17); the
-        # committed offsets also floor the drain gate so it can never hold
-        # a shard below what Spark has durably recorded.
-        self._floor_scheduled(end)
-
-    def stop(self) -> None:
-        pass
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
+        for shard, hi in end.items():
+            yield from _read_shard(
+                self.stream_dir, shard, int(start.get(shard, 0)), int(hi)
+            )
 
 
 class _StagedParts(WriterCommitMessage):
@@ -499,7 +452,7 @@ class KinesisSimDataSource(DataSource):
     def reader(self, schema) -> DataSourceReader:
         return _BatchReader(self.options)
 
-    def streamReader(self, schema) -> DataSourceStreamReader:
+    def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:
         return _StreamReader(self.options)
 
     def writer(self, schema, overwrite: bool) -> DataSourceWriter:

@@ -178,6 +178,21 @@ def test_bench_essential_line_fits_tail_capture():
     assert rec["queries"] == times and rec["unit"] == "sec"
 
 
+def test_bench_witness_row_pinned():
+    """The core-scaling witness row stays in the headline suite, and its
+    oracle keeps the oracle_quadratic tag, so bench.py reports it as
+    no-baseline instead of timing DuckDB's deliberate all-pairs check."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import bench
+    from lagom_kinesis_spark.registry import all_queries
+
+    assert "dedup_jaccard_pairs" in bench.HEADLINE
+    assert "oracle_quadratic" in all_queries()["dedup_jaccard_pairs"].tags
+
+
 def test_bench_task_counts_telemetry(spark):
     """_task_counts must attribute a job group's tasks/stages (the
     core-scaling witness telemetry, VERDICT r12 ask #2) and degrade to {}

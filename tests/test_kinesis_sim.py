@@ -120,7 +120,8 @@ def test_topic_layer_consumes_kinesis_sim(spark, stream_dir):
     from lagom_kinesis_spark.streaming.topics import Topic
 
     _registered(spark)
-    put_records(stream_dir, [(json.dumps({"i": i}), f"u{i % 2}") for i in range(8)])
+    tips = put_records(stream_dir, [(json.dumps({"i": i}), f"u{i}") for i in range(8)])
+    assert len(tips) == 4 and all(tips.values())  # every shard holds records
     topic = Topic(
         name=f"ksim-{uuid.uuid4().hex[:6]}",
         schema=SCHEMA,
@@ -129,8 +130,17 @@ def test_topic_layer_consumes_kinesis_sim(spark, stream_dir):
         source_format="kinesis_sim",
     )
     seen: list[int] = []
-    topic.subscribe("g1").at_least_once(lambda df, eid: seen.append(df.count()))
+    parts: list[int] = []
+
+    def flow(df, eid):
+        parts.append(df.rdd.getNumPartitions())
+        seen.append(df.count())
+
+    topic.subscribe("g1").at_least_once(flow)
     assert sum(seen) == 8
+    # Streaming reads run on the driver: each micro-batch over the 4-shard
+    # stream arrives as one prefetched block, not one read task per shard.
+    assert parts and all(n == 1 for n in parts), parts
     shutil.rmtree(topic.checkpoint_base + "/" + topic.name, ignore_errors=True)
 
 
@@ -462,16 +472,28 @@ def test_stream_reader_drains_parent_before_child(spark, stream_dir, tmp_path):
         assert ordered == pres + posts
 
 
+def _engine_reader(opts):
+    """The reader as the engine drives it: Spark wraps a simple stream
+    reader in its prefetch-and-cache adapter on the driver."""
+    from pyspark.sql.datasource_internal import _SimpleStreamReaderWrapper
+
+    from lagom_kinesis_spark.sources.kinesis_sim import _StreamReader
+
+    return _SimpleStreamReaderWrapper(_StreamReader(opts))
+
+
 def test_drain_gate_never_regresses_after_restart(stream_dir):
-    """A reader restarted from a checkpoint has an empty in-memory drain
-    gate; latestOffset must still never return an offset below what the
-    prior run committed (a regressed end offset in Spark's offset log means
-    re-delivery). Drives the DataSourceStreamReader calls in the order the
-    engine issues them (observed, Spark 4.1): fresh start = latestOffset →
+    """A restarted reader holds no state from the prior run; latestOffset
+    must still never return an offset below what the prior run committed
+    (a regressed end offset in Spark's offset log means re-delivery).
+    Drives the adapter in the order the engine calls it (Spark 4.1):
+    fresh start = latestOffset (which reads from initialOffset) →
     initialOffset → partitions → commit; restart = partitions(start, end)
-    re-plan of the last offset-log batch, THEN latestOffset."""
+    re-plan of the last offset-log batch, or a commit of it, THEN
+    latestOffset."""
+    from pyspark.sql.datasource_internal import SimpleInputPartition
+
     from lagom_kinesis_spark.sources.kinesis_sim import (
-        _StreamReader,
         create_stream,
         put_records_ranged,
         split_shard,
@@ -483,13 +505,16 @@ def test_drain_gate_never_regresses_after_restart(stream_dir):
     left, right = split_shard(stream_dir, "shard-00000")
     put_records_ranged(stream_dir, [(f"post{i}", f"k{i % 3}") for i in range(9)])
 
-    # Run 1 (fresh): batch 1 schedules the parent, holds children; batch 2
+    # Run 1 (fresh): batch 1 reads the parent, holds children; batch 2
     # releases the children once the parent is drained.
-    r1 = _StreamReader(opts)
+    r1 = _engine_reader(opts)
     end1 = r1.latestOffset()
     assert end1["shard-00000"] == 9 and end1[left] == 0 and end1[right] == 0
     start = r1.initialOffset()
     r1.partitions(start, end1)
+    batch1 = list(r1.getCache(start, end1))
+    assert [r[2] for r in batch1] == list(range(9))
+    assert {r[3] for r in batch1} == {"shard-00000"}
     r1.commit(end1)
     end2 = r1.latestOffset()
     assert end2[left] + end2[right] == 9
@@ -497,17 +522,21 @@ def test_drain_gate_never_regresses_after_restart(stream_dir):
     r1.commit(end2)
 
     # Restart: the engine re-plans the last offset-log batch via
-    # partitions(start, end) before any latestOffset — that call seeds the
-    # gate, so the first latestOffset answer never drops below end2.
-    r2 = _StreamReader(opts)
-    r2.partitions(end1, end2)
+    # partitions(start, end) before any latestOffset. The prefetch cache
+    # is empty, so the batch is replayed through readBetweenOffsets, and
+    # the next read starts at end2 — never below it.
+    r2 = _engine_reader(opts)
+    (part,) = r2.partitions(end1, end2)
+    assert r2.getCache(end1, end2) is None
+    replay = list(r2.read(SimpleInputPartition(part.start, part.end)))
+    assert sorted(r[0] for r in replay) == sorted(f"post{i}" for i in range(9))
     end3 = r2.latestOffset()
     for shard, committed in end2.items():
         assert end3[shard] >= committed, (shard, end3, end2)
 
-    # commit() floors the gate the same way (defense in depth for any
-    # protocol variant that commits the re-run before planning anew).
-    r3 = _StreamReader(opts)
+    # A restart that commits the re-run batch before planning anew starts
+    # its next read from the committed end the same way.
+    r3 = _engine_reader(opts)
     r3.commit(end2)
     end4 = r3.latestOffset()
     for shard, committed in end2.items():
@@ -516,11 +545,9 @@ def test_drain_gate_never_regresses_after_restart(stream_dir):
 
 def test_drain_gate_latest_start_does_not_regress(stream_dir):
     """LATEST + drain_parents_first: the whole backlog is skipped, so the
-    gate must not hold a child below the tip-valued initial offset — and
-    latestOffset is called BEFORE initialOffset on a fresh query, so the
-    tip floor has to come from the reader's own first answer."""
+    gate must not hold a child below the tip-valued initial offset — the
+    parents start at their tips and count as drained."""
     from lagom_kinesis_spark.sources.kinesis_sim import (
-        _StreamReader,
         create_stream,
         put_records_ranged,
         split_shard,
@@ -531,13 +558,40 @@ def test_drain_gate_latest_start_does_not_regress(stream_dir):
     left, right = split_shard(stream_dir, "shard-00000")
     put_records_ranged(stream_dir, [(f"post{i}", f"k{i % 3}") for i in range(6)])
 
-    r = _StreamReader(
+    r = _engine_reader(
         {"path": stream_dir, "drain_parents_first": "true", "startingposition": "LATEST"}
     )
     end = r.latestOffset()  # engine calls this first on a fresh query
     start = r.initialOffset()
+    assert start["shard-00000"] == 6 and start[left] + start[right] == 6
     for shard, lo in start.items():
         assert end[shard] >= lo, (shard, end, start)
+    # Records put after the start reach the children in the next batch.
+    put_records_ranged(stream_dir, [(f"new{i}", f"k{i % 3}") for i in range(6)])
+    nxt = r.latestOffset()
+    r.partitions(end, nxt)
+    assert sorted(x[0] for x in r.getCache(end, nxt)) == [f"new{i}" for i in range(6)]
+
+
+def test_stream_read_stops_at_a_partial_tail(stream_dir):
+    """A put still being appended leaves its last line without the
+    newline; the driver-side read stops before that line instead of
+    failing to parse it, and the next read picks the record up."""
+    import os
+
+    from lagom_kinesis_spark.sources.kinesis_sim import _StreamReader
+
+    put_records(stream_dir, [("a", "k"), ("b", "k")], n_shards=1)
+    path = os.path.join(stream_dir, "shard-00000", "records.jsonl")
+    with open(path, "a") as f:
+        f.write('{"data": "c", "parti')
+    r = _StreamReader({"path": stream_dir})
+    rows, end = r.read({"shard-00000": 0})
+    assert [x[0] for x in rows] == ["a", "b"] and end == {"shard-00000": 2}
+    with open(path, "a") as f:
+        f.write('tion_key": "k"}\n')
+    rows, end = r.read(end)
+    assert [x[0] for x in rows] == ["c"] and end == {"shard-00000": 3}
 
 
 def test_stream_restart_with_drain_gate_no_duplicates(spark, stream_dir, tmp_path):

@@ -54,14 +54,14 @@ def _n_events() -> int:
     ).fetchone()[0]
 
 
-def test_at_least_once_redelivery_no_loss(topic, tmp_path):
-    """Failure mid-batch ⇒ whole batch redelivered on restart (2C.1)."""
-    out = tmp_path / "out.jsonl"
+def _fail_once_then_deliver(topic, out, summarize) -> list:
+    """Run an at-least-once subscriber whose flow fails on its first call,
+    restart it once; returns what each delivered batch summarized to."""
     attempts = {"n": 0}
 
     def flaky_flow(df, epoch_id):
         attempts["n"] += 1
-        rows = df.count()
+        rows = summarize(df)
         if attempts["n"] == 1:
             raise RuntimeError("injected failure before commit")
         with open(out, "a") as f:
@@ -81,10 +81,48 @@ def test_at_least_once_redelivery_no_loss(topic, tmp_path):
         sleep=lambda s: None,
     )
     assert len(failures) == 1  # first run failed before commit
-    processed = sum(
-        json.loads(line)["rows"] for line in open(out).read().splitlines()
+    return [json.loads(line)["rows"] for line in open(out).read().splitlines()]
+
+
+def test_at_least_once_redelivery_no_loss(spark, topic, tmp_path):
+    """Failure mid-batch ⇒ whole batch redelivered on restart (2C.1).
+
+    Over kinesis_sim the restarted query replays the uncommitted batch with
+    an empty prefetch cache, so the replay re-reads it in a Python task
+    (readBetweenOffsets) rather than from the driver-side prefetch."""
+    counts = _fail_once_then_deliver(
+        topic, tmp_path / "out.jsonl", lambda df: df.count()
     )
-    assert processed == _n_events()  # redelivered in full — no loss
+    assert sum(counts) == _n_events()  # redelivered in full — no loss
+
+    from lagom_kinesis_spark.sources import KinesisSimDataSource, put_records
+    from lagom_kinesis_spark.sources.kinesis_sim import SCHEMA
+
+    spark.dataSource.register(KinesisSimDataSource)
+    path = str(tmp_path / "ksim")
+    tips = put_records(path, [(json.dumps({"i": i}), f"u{i}") for i in range(40)])
+    assert len(tips) == 4 and all(tips.values())  # every shard holds records
+    ktopic = Topic(
+        name="ksim",
+        schema=SCHEMA,
+        spark=spark,
+        source_path=path,
+        source_format="kinesis_sim",
+        checkpoint_base=str(tmp_path / "ksim_ckpt"),
+    )
+    batches = _fail_once_then_deliver(
+        ktopic,
+        tmp_path / "ksim_out.jsonl",
+        lambda df: [
+            [r.shard_id, r.sequence_number]
+            for r in df.select("shard_id", "sequence_number").collect()
+        ],
+    )
+    by_shard: dict[str, list[int]] = {}
+    for shard, seq in (rec for batch in batches for rec in batch):
+        by_shard.setdefault(shard, []).append(seq)
+    # Every record redelivered once, each shard contiguous and in order.
+    assert by_shard == {shard: list(range(tip)) for shard, tip in tips.items()}
 
 
 def test_at_most_once_loss_no_redelivery(topic, tmp_path):
