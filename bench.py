@@ -83,10 +83,13 @@ TRAJECTORY = [
 
 
 def _cpus_env() -> int | str:
+    from lagom_kinesis_spark.session import machine_defaults
+
+    cpus = machine_defaults()[0]
     try:
-        return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        return int(cpus)
     except ValueError:
-        return os.environ.get("SPARK_GRAFT_CPUS", "32")
+        return cpus
 
 
 def _essential_record(
@@ -101,6 +104,9 @@ def _essential_record(
         "metric": "headline_suite_wallclock",
         "value": round(total, 3),
         "unit": "sec",
+        # rows summed into value: the suite grew from 18 to 19 rows in r13
+        # (dedup_jaccard_pairs), so totals compare only at equal row counts
+        "suite_rows": len(times),
         "queries": times,
         "sf": sf,
         "tainted": tainted,
@@ -156,14 +162,9 @@ def _time_spark(
         # memory pressure that swung the driver-recorded minhash number
         # +80% in r5 (VERDICT r5 "What's wrong" #3). Clearing the cache and
         # nudging GC between iterations (untimed) makes every run pay the
-        # identical, reproducible cost. State-store providers are NOT
-        # unloaded during the bench (SPARK_GRAFT_STREAM_UNLOAD=0 in main()
-        # disables memory_sink_table's per-call unload): StateStore.stop()
-        # costs ~70 ms timed, and unloading between runs just moves the
-        # maintenance-machinery RESTART into the next timed run. Provider
-        # growth over one bench (a handful of streaming entries × ≤7 runs
-        # × 4 partitions of sf0.1-sized state) is bounded and tiny; the
-        # 300-query gate sweeps keep the per-call unload.
+        # identical, reproducible cost. memory_sink_table unloads the
+        # state-store providers at the end of every call, so each timed
+        # streaming run includes that StateStore.stop() (~70 ms, r8).
         try:
             spark.catalog.clearCache()
             spark.sparkContext._jvm.System.gc()  # noqa: SLF001
@@ -548,11 +549,7 @@ def main() -> None:
     # 64-hash minhash aggregate is the worst) run partially interpreted —
     # a measured 2-5× transient that one fixed warm-up under-absorbs and
     # that no multi-JVM cluster deployment would ever see per-query. The
-    # identical warm-to-stable rule is applied to DuckDB below. The
-    # registry's periodic GC nudge is disabled during timed runs
-    # (SPARK_GRAFT_GC_NUDGE=0) and performed here between queries instead.
-    os.environ["SPARK_GRAFT_GC_NUDGE"] = "0"
-    os.environ["SPARK_GRAFT_STREAM_UNLOAD"] = "0"
+    # identical warm-to-stable rule is applied to DuckDB below.
     times, telemetry = _time_spark(qs, spark, headline, sf_dir)
     total = sum(times.values())
 
@@ -657,6 +654,7 @@ def main() -> None:
                 "metric": "headline_suite_wallclock",
                 "value": round(total, 3),
                 "unit": "sec",
+                "suite_rows": len(times),
                 "queries": times,
                 "sf": sf,
                 "cpus": cpus,
@@ -722,8 +720,6 @@ def scaling_tier_main(sf_dir: str, tier_out: str) -> None:
     from lagom_kinesis_spark.session import get_spark
 
     spark = get_spark("lagom-kinesis-spark-scaling-tier")
-    os.environ["SPARK_GRAFT_GC_NUDGE"] = "0"
-    os.environ["SPARK_GRAFT_STREAM_UNLOAD"] = "0"
     qs = all_queries()
     names = TRAJECTORY
     subset = os.environ.get("SPARK_GRAFT_TIER_QUERIES")
@@ -907,7 +903,7 @@ def scaling_main(out_path: str, skip_sf10: bool = False) -> None:
     payload = {
         "metric": "scaling_trajectory",
         "unit": "sec",
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": str(_cpus_env()),
         "queries": TRAJECTORY,
         "sf30_queries": SF30_SUBSET if sf30_skip_reason is None else None,
         "sf30_skipped": sf30_skip_reason,

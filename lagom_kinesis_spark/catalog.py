@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
-from lagom_kinesis_spark.session import tune
+from lagom_kinesis_spark.session import scratch_root, tune
 
 #: Every driver-provided fixture table (TESTDATA.md).
 TABLES: tuple[str, ...] = (
@@ -117,7 +117,7 @@ def io_scratch(name: str, sf_dir: str, source: str | None = None) -> str:
     import re
     import shutil
 
-    base = "/tmp/lagom_kinesis_spark/io"
+    base = os.path.join(scratch_root(), "io")
     os.makedirs(base, exist_ok=True)
     global _IO_GC_DONE
     if not _IO_GC_DONE:
@@ -211,7 +211,7 @@ def stream_dir(sf_dir: str, name: str) -> str:
     to the parquet. Idempotent per (sf_dir, name)."""
     import os
 
-    d = f"/tmp/lagom_kinesis_spark/stream_src/{stable_tag(sf_dir)}_{name}"
+    d = os.path.join(scratch_root(), "stream_src", f"{stable_tag(sf_dir)}_{name}")
     link = f"{d}/{name}.parquet"
     if not os.path.islink(link):
         os.makedirs(d, exist_ok=True)

@@ -17,8 +17,9 @@ Scale notes:
   capture time, which silently re-inserts all the per-iteration
   exchanges, and (b) AQE's byte-based coalescing would re-number one
   side's partitions and break co-partitioning mid-loop. The toggle is
-  scoped to a CLONED session (r13): the caller's session conf is never
-  touched, so concurrent queries keep planning adaptively.
+  scoped to the loop's own ``session.child_session``: the caller's
+  session conf is never touched, so concurrent queries keep planning
+  adaptively.
 - ``localCheckpoint`` truncates the lineage each round; without it the
   plan doubles per iteration and the job dies long before 100 TB.
 - For adversarial graphs (long chains) swap in the large-star/small-star
@@ -28,19 +29,10 @@ Scale notes:
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Caller confs the loop session must mirror (beyond RUNTIME_CONFS):
-#: partition count decides the pinned layouts' width; the broadcast
-#: threshold keeps the caller's join-strategy posture (tests disable it to
-#: prove the SMJ co-partitioning; a driver harness may size it).
-_MIRROR_CONFS = (
-    "spark.sql.shuffle.partitions",
-    "spark.sql.autoBroadcastJoinThreshold",
-)
+from lagom_kinesis_spark.session import child_session, handoff
 
 
 def connected_components(
@@ -49,133 +41,100 @@ def connected_components(
     """(id, cluster_id) for every node in ``pairs``; cluster_id = min node
     id of the component. Deterministic; fixpoint-checked each round.
 
-    The iteration loop runs on a CLONED session (``spark.newSession()`` —
-    shared SparkContext/catalog data, isolated SQL conf) with AQE disabled
-    there, never on the caller's session: the r12 implementation flipped
-    ``spark.sql.adaptive.enabled`` on the shared session and restored it in
-    ``finally``, which silently de-adapted any CONCURRENT query on the same
-    SparkSession for the duration of the loop and let two concurrent CC
-    calls race the restore (VERDICT r12 #3 — a real footgun in a shared
-    100 TB session). Frames cross the session boundary through global temp
-    views (the documented cross-session handoff; plain temp views are
-    session-isolated), and the returned frame is re-bound to the CALLER's
-    session over the final checkpoint scan, so downstream plans compose
-    with caller frames exactly as before. pytest proves a concurrent frame
-    still plans adaptively mid-loop (tests/test_operators.py)."""
+    The loop runs on a child session with AQE off (module notes; the r12
+    flip on the shared session de-adapted concurrent queries, VERDICT r12
+    #3); the result is handed back to the caller's session over the final
+    checkpoint scan, so it composes with caller frames as before."""
     if max_iter < 1:
         # The non-convergence diagnostic below references the last round's
         # change count; with zero rounds it would raise a NameError instead
         # of the intended message.
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     caller = pairs.sparkSession
-    from lagom_kinesis_spark.session import tune
-
-    loop = tune(caller.newSession())
-    for k in _MIRROR_CONFS:
-        v = caller.conf.get(k, None)
-        if v is not None:
-            loop.conf.set(k, v)
-    loop.conf.set("spark.sql.adaptive.enabled", "false")
+    loop = child_session(caller, {"spark.sql.adaptive.enabled": "false"})
     n_part = int(loop.conf.get("spark.sql.shuffle.partitions"))
-    tag = uuid.uuid4().hex[:12]
-    in_view, out_view = f"cc_pairs_{tag}", f"cc_labels_{tag}"
-    pairs.createOrReplaceGlobalTempView(in_view)
-    try:
-        pairs_loop = loop.table(f"global_temp.{in_view}")
-        fwd = pairs_loop.select(
-            F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+    pairs_loop = handoff(pairs, loop)
+    fwd = pairs_loop.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    # Materialize the edge list ONCE: every iteration joins against it,
+    # and without truncation each round would re-run the (potentially
+    # expensive) pair-generation plan upstream — e.g. an all-pairs
+    # Jaccard join — once per iteration. Partition by src and sort
+    # within partitions BEFORE the checkpoint: hash(src) satisfies
+    # dropDuplicates' ClusteredDistribution([src,dst]) (both copies of
+    # a duplicate edge share src), so the dedup aggregate reuses the
+    # repartition exchange, and the preserved hash(src)+[src ASC]
+    # layout makes every iteration's edges⋈labels a zero-Exchange,
+    # zero-Sort merge join on the edge side.
+    edges = (
+        fwd.unionByName(
+            fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        # Materialize the edge list ONCE: every iteration joins against it,
-        # and without truncation each round would re-run the (potentially
-        # expensive) pair-generation plan upstream — e.g. an all-pairs
-        # Jaccard join — once per iteration. Partition by src and sort
-        # within partitions BEFORE the checkpoint: hash(src) satisfies
-        # dropDuplicates' ClusteredDistribution([src,dst]) (both copies of
-        # a duplicate edge share src), so the dedup aggregate reuses the
-        # repartition exchange, and the preserved hash(src)+[src ASC]
-        # layout makes every iteration's edges⋈labels a zero-Exchange,
-        # zero-Sort merge join on the edge side.
-        edges = (
-            fwd.unionByName(
-                fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .repartition(n_part, "src")
-            .dropDuplicates(["src", "dst"])
-            .sortWithinPartitions("src")
-            .localCheckpoint()
+        .repartition(n_part, "src")
+        .dropDuplicates(["src", "dst"])
+        .sortWithinPartitions("src")
+        .localCheckpoint()
+    )
+    # distinct over src needs ClusteredDistribution([src]) — already
+    # satisfied by the inherited hash(src): no exchange. The id/label
+    # columns are projected only AFTER the checkpoint: checkpoint
+    # capture keeps just the FIRST leaf of a PartitioningCollection,
+    # and an alias like ``label = src`` puts hash(label) first
+    # (measured — the loop then re-shuffled labels every round
+    # because the captured layout named the wrong column). A
+    # single-column checkpoint captures hash(src) unambiguously; the
+    # post-checkpoint Project translates it alias-aware to both
+    # hash(id) and hash(label) at use time. Later iterations' labels
+    # inherit hash(id)+[id ASC] from the id-keyed left join below,
+    # so the loop never re-shuffles labels.
+    labels = (
+        edges.select("src")
+        .distinct()
+        .sortWithinPartitions("src")
+        .localCheckpoint()
+        .select(F.col("src").alias("id"), F.col("src").alias("label"))
+    )
+    for _ in range(max_iter):
+        # The ONE shuffle per round: re-keying neighbor min-labels
+        # from src-partitioning to dst — that exchange IS the label
+        # propagation and cannot be removed.
+        nbr_min = (
+            edges.join(labels, edges.src == labels.id)
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.min("label").alias("nbr_label"))
         )
-        # distinct over src needs ClusteredDistribution([src]) — already
-        # satisfied by the inherited hash(src): no exchange. The id/label
-        # columns are projected only AFTER the checkpoint: checkpoint
-        # capture keeps just the FIRST leaf of a PartitioningCollection,
-        # and an alias like ``label = src`` puts hash(label) first
-        # (measured — the loop then re-shuffled labels every round
-        # because the captured layout named the wrong column). A
-        # single-column checkpoint captures hash(src) unambiguously; the
-        # post-checkpoint Project translates it alias-aware to both
-        # hash(id) and hash(label) at use time. Later iterations' labels
-        # inherit hash(id)+[id ASC] from the id-keyed left join below,
-        # so the loop never re-shuffles labels.
-        labels = (
-            edges.select("src")
-            .distinct()
-            .sortWithinPartitions("src")
-            .localCheckpoint()
-            .select(F.col("src").alias("id"), F.col("src").alias("label"))
+        new_label = F.least(
+            F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
         )
-        for _ in range(max_iter):
-            # The ONE shuffle per round: re-keying neighbor min-labels
-            # from src-partitioning to dst — that exchange IS the label
-            # propagation and cannot be removed.
-            nbr_min = (
-                edges.join(labels, edges.src == labels.id)
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("label").alias("nbr_label"))
+        # The change flag rides INSIDE the checkpointed frame
+        # (1 byte/row) so the fixpoint check is a filter+count over
+        # already-materialized partitions — the old form re-joined new
+        # labels against old (|V|⋈|V| shuffle per iteration) to
+        # compute the same number (r12; min-label never increases, so
+        # changed ⇔ new < old).
+        new_labels = (
+            labels.join(nbr_min, "id", "left")
+            .select(
+                "id",
+                new_label.alias("new_label"),
+                (new_label < F.col("label")).alias("chg"),
             )
-            new_label = F.least(
-                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-            )
-            # The change flag rides INSIDE the checkpointed frame
-            # (1 byte/row) so the fixpoint check is a filter+count over
-            # already-materialized partitions — the old form re-joined new
-            # labels against old (|V|⋈|V| shuffle per iteration) to
-            # compute the same number (r12; min-label never increases, so
-            # changed ⇔ new < old).
-            new_labels = (
-                labels.join(nbr_min, "id", "left")
-                .select(
-                    "id",
-                    new_label.alias("new_label"),
-                    (new_label < F.col("label")).alias("chg"),
-                )
-                .withColumnRenamed("new_label", "label")
-                .localCheckpoint()  # truncate lineage — mandatory for iteration
-            )
-            changed = new_labels.filter("chg").count()
-            labels = new_labels.select("id", "label")
-            if changed == 0:
-                break
-        else:
-            # Exhausting max_iter without a fixpoint means some component's
-            # diameter exceeds the iteration budget — returning the partial
-            # labels would silently split one logical cluster into several
-            # (duplicate documents surviving dedup with no signal). Fail loud.
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} "
-                f"iterations ({changed} labels still changing); raise max_iter"
-            )
-        # Re-bind the result to the CALLER's session: ``labels`` is a thin
-        # projection over the last localCheckpoint (a materialized,
-        # session-independent RDD on the shared context), so the handoff
-        # view carries no loop-session conf and executes under the
-        # caller's own AQE/settings like any other frame.
-        out = labels.select("id", F.col("label").alias("cluster_id"))
-        out.createOrReplaceGlobalTempView(out_view)
-        result = caller.table(f"global_temp.{out_view}")
-        # Pin the schema/plan then drop the handoff views — the result
-        # frame holds the analyzed plan, not the view name.
-        result = result.select("id", "cluster_id")
-        return result
-    finally:
-        caller.catalog.dropGlobalTempView(in_view)
-        caller.catalog.dropGlobalTempView(out_view)
+            .withColumnRenamed("new_label", "label")
+            .localCheckpoint()  # truncate lineage — mandatory for iteration
+        )
+        changed = new_labels.filter("chg").count()
+        labels = new_labels.select("id", "label")
+        if changed == 0:
+            break
+    else:
+        # Exhausting max_iter without a fixpoint means some component's
+        # diameter exceeds the iteration budget — returning the partial
+        # labels would silently split one logical cluster into several
+        # (duplicate documents surviving dedup with no signal). Fail loud.
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} "
+            f"iterations ({changed} labels still changing); raise max_iter"
+        )
+    # ``labels`` is a projection over the last localCheckpoint (an RDD on
+    # the shared context): on the caller's session it runs under the
+    # caller's own confs.
+    return handoff(labels.select("id", F.col("label").alias("cluster_id")), caller)

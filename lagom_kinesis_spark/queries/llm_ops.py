@@ -129,7 +129,13 @@ def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram-shingle Jaccard pairs (≥0.3) over a 1/2 sample — the
     correctness oracle for near-dup detection. All-pairs is O(n²): only ever
-    run on samples; the full-corpus path is dedup_minhash_lsh."""
+    run on samples; the full-corpus path is dedup_minhash_lsh.
+
+    Circular as an audit of the banded/LSH paths: it compares the same
+    shingle_hash_proxy longs they do, so a proxy collision would move both
+    arms alike. The checks that do not share the proxy are the string-based
+    DuckDB oracle and tests/test_operators.py::
+    test_shingle_proxy_matches_string_shingles_on_sample."""
     d = fan_out(load(spark, sf_dir, "documents")).filter(F.col("doc_id") % 2 == 0)
     # xxhash64 proxy (r13, guide §2.3): jac reads set sizes only, so the
     # theta join broadcasts/compares 8-byte longs instead of ~25-byte

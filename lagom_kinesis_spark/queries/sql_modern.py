@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from lagom_kinesis_spark.catalog import register_views
 from lagom_kinesis_spark.registry import register
+from lagom_kinesis_spark.session import child_session, handoff
 
 
 @register(
@@ -544,15 +545,13 @@ def sql_scripting_while(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~log2(max price/1000) ≈ 9 iterations regardless of scale, and the
     final SELECT is one ordinary aggregate — scripting adds driver-side
     control flow only, never a per-row surface."""
-    register_views(spark, sf_dir, ("orders",))
-    # Save/restore, like every other conf-touching query fn (the shared
-    # gate session must not stay mutated after this call): the conf only
-    # gates PARSING of the BEGIN block, which happens inside spark.sql(),
-    # so restoring after it returns cannot affect the returned DataFrame.
-    prev = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
-        return spark.sql(
+    # The flag gates PARSING of the BEGIN block (default true on Spark
+    # 4.1). The script runs on a child session with the flag on and its own
+    # views, so a caller that turned the flag off keeps it off.
+    child = child_session(spark, {"spark.sql.scripting.enabled": "true"})
+    register_views(child, sf_dir, ("orders",))
+    return handoff(
+        child.sql(
             """
             BEGIN
               DECLARE total BIGINT DEFAULT 0;
@@ -569,9 +568,6 @@ def sql_scripting_while(spark: SparkSession, sf_dir: str) -> DataFrame:
               GROUP BY o_orderpriority;
             END
             """
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", prev)
+        ),
+        spark,
+    )

@@ -52,14 +52,7 @@ def _periodic_gc(spark: SparkSession, every: int = 16, min_interval_s: float = 4
     ``min_interval_s`` floor keeps fast back-to-back sweeps (the bench's
     best-of-2 loop) from paying it when nothing has had time to accumulate."""
     global _calls_since_gc, _last_gc_at
-    import os as _os
     import time as _time
-
-    # bench.py opts out: the nudge otherwise lands INSIDE a timed region on
-    # whichever query hits the interval, polluting that query's number; the
-    # bench performs the same nudge itself between queries, untimed.
-    if _os.environ.get("SPARK_GRAFT_GC_NUDGE") == "0":
-        return
 
     _calls_since_gc += 1
     now = _time.monotonic()
@@ -88,16 +81,6 @@ def register(
             # accumulate executor-memory pressure.
             try:
                 spark.catalog.clearCache()
-            except Exception:
-                pass
-            # A volume hint left by a query that sourced events_stream but
-            # sank outside memory_sink_table must not leak into this one.
-            try:
-                from lagom_kinesis_spark.streaming.topics import (
-                    clear_stream_shuffle_hint,
-                )
-
-                clear_stream_shuffle_hint()
             except Exception:
                 pass
             _periodic_gc(spark)

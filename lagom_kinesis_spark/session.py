@@ -1,11 +1,15 @@
 """SparkSession construction and per-session tuning.
 
-Two entry points:
+Entry points:
 
 - :func:`get_spark` builds a session for tests / bench (local[N]).
 - :func:`tune` applies the runtime-settable confs we rely on to an
   *externally provided* session (the driver harness owns its own session and
   passes it into ``queries()`` callables), without restarting it.
+- :func:`child_session` + :func:`handoff`: the one way an operator runs
+  under different confs (stream state partitions, state-store provider,
+  AQE off for an iterative loop) — on an owned child session, never by
+  setting a conf on the caller's.
 
 Scale notes (100 TB): every conf here is also correct on a real cluster —
 AQE coalesces post-shuffle partitions and handles skew joins at runtime, so we
@@ -17,8 +21,34 @@ AQE shrinks from there; locally we pin it to the core count.
 from __future__ import annotations
 
 import os
+import tempfile
+import threading
+import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+from lagom_kinesis_spark.functions.helpers import memo_by_identity
+
+
+def machine_defaults() -> tuple[str, str]:
+    """(cores, driver memory) for a local session: ``SPARK_GRAFT_CPUS`` and
+    ``SPARK_DRIVER_MEM`` when set, else the cores this process may run on
+    and a quarter of the machine's memory."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    mem = os.environ.get("SPARK_DRIVER_MEM")
+    if not mem:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+        mem = f"{kb // 4096}m"
+    return cpus, mem
+
+
+def scratch_root() -> str:
+    """Root of every scratch path the engine writes (stream-source links,
+    checkpoints, io layouts): ``lagom_kinesis_spark`` under the temp dir,
+    resolved per call so a changed ``TMPDIR`` takes effect."""
+    return os.path.join(tempfile.gettempdir(), "lagom_kinesis_spark")
+
 
 #: Runtime-settable SQL confs every query relies on. Applied idempotently.
 RUNTIME_CONFS: dict[str, str] = {
@@ -58,7 +88,7 @@ RUNTIME_CONFS: dict[str, str] = {
     # hardcoded value here would silently shadow get_spark's builder
     # config (RUNTIME_CONFS is applied last) AND pin externally provided
     # sessions to the wrong size via tune().
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.sql.shuffle.partitions": machine_defaults()[0],
     # Honor the SORTED BY metadata of bucketed scans so a bucket-key
     # SortMergeJoin needs NO runtime sort (Spark 3+ stopped propagating
     # the ordering by default — SPARK-28595 — because a bucket split
@@ -79,15 +109,14 @@ RUNTIME_CONFS: dict[str, str] = {
 #: Sessions already tuned: tune() is called on every catalog.load and from
 #: many query entry points — ~13 py4j conf roundtrips each time adds tens
 #: of ms of pure fixed cost per query. Confs set once on a session stay set
-#: (the only in-repo mutation, memory_sink_table's shuffle-partition
-#: override, restores its previous value), so re-applying per call buys
-#: nothing. Keyed on id(session) with the session object PINNED in the
-#: value: the earlier JVM identity hashCode() is NOT unique across
-#: sessions, and a collision would silently skip correctness-critical
-#: confs (UTC timezone, nanosAsLong) on the colliding session. The pin
-#: makes id() reuse safe (a recycled id can't alias — the stored object
-#: comparison fails); worst case for a re-wrapped JVM session is one
-#: redundant idempotent re-tune.
+#: (no engine operator sets a conf on a caller's session; conf-scoped runs
+#: go to a child_session), so re-applying per call buys nothing. Keyed on
+#: id(session) with the session object PINNED in the value: the earlier
+#: JVM identity hashCode() is NOT unique across sessions, and a collision
+#: would silently skip correctness-critical confs (UTC timezone,
+#: nanosAsLong) on the colliding session. The pin makes id() reuse safe
+#: (a recycled id can't alias — the stored object comparison fails); worst
+#: case for a re-wrapped JVM session is one redundant idempotent re-tune.
 _TUNED: dict[int, SparkSession] = {}
 
 
@@ -108,14 +137,75 @@ def tune(spark: SparkSession) -> SparkSession:
     for k, v in RUNTIME_CONFS.items():
         try:
             if spark.conf.get(k, None) != v:
-                spark.conf.set(k, v)
-        except Exception as e:  # noqa: BLE001
-            if "static" in str(e).lower() or "CANNOT_MODIFY" in str(e):
-                continue  # static conf on this build — leave as-is
+                _set_conf(spark, k, v)
+        except Exception:  # noqa: BLE001
             ok = False  # transient: retry on the next tune() call
     if ok:
         _TUNED[key] = spark
     return spark
+
+
+def _set_conf(spark: SparkSession, k: str, v: str | None) -> None:
+    """Set (``v=None``: unset) one conf, leaving a static conf as-is."""
+    try:
+        if v is None:
+            spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
+    except Exception as e:  # noqa: BLE001
+        if "static" not in str(e).lower() and "CANNOT_MODIFY" not in str(e):
+            raise
+
+
+#: child_session's memo; the lock keeps two threads from building twins.
+_CHILDREN: dict = {}
+_CHILDREN_LOCK = threading.Lock()
+
+
+def child_session(
+    caller: SparkSession, overrides: dict[str, str] | None = None
+) -> SparkSession:
+    """The session a conf-scoped run executes on: ``caller.newSession()``
+    (shared context, cache and global temp views; own conf and temp views)
+    carrying the caller's CURRENT SQL conf plus ``overrides`` — so the
+    caller's conf never changes under a concurrent query.
+
+    Memoized per (caller, conf snapshot, overrides): every session that
+    starts a stream adds a never-removed listener to the context's bus. The
+    snapshot is the JVM-side conf string (2 py4j round trips; ``getAll``
+    costs ~120, paid on a miss only), so a conf the caller changes reaches
+    the next call's child. Not ``cloneSession()``: a memoized clone would
+    keep the caller's temp views as of the clone."""
+    items = tuple(sorted((overrides or {}).items()))
+    snapshot = caller.conf._jconf.getAll().toString()  # noqa: SLF001
+
+    def build() -> SparkSession:
+        child = caller.newSession()
+        want = {**caller.conf.getAll, **dict(items)}
+        have = child.conf.getAll
+        for k in have.keys() - want.keys():
+            _set_conf(child, k, None)
+        for k, v in want.items():
+            if have.get(k) != v:
+                _set_conf(child, k, v)
+        return child
+
+    with _CHILDREN_LOCK:
+        return memo_by_identity(_CHILDREN, caller, (snapshot, items), build)
+
+
+def handoff(df: DataFrame, to: SparkSession) -> DataFrame:
+    """``df`` re-bound to session ``to``, through a global temp view (plain
+    temp views are session-local). Analysis is forced before the view is
+    dropped, so the returned frame holds the plan, not the view's name."""
+    view = f"handoff_{uuid.uuid4().hex[:12]}"
+    df.createOrReplaceGlobalTempView(view)
+    try:
+        out = to.table(f"global_temp.{view}")
+        out.schema  # noqa: B018 - forces analysis
+    finally:
+        to.catalog.dropGlobalTempView(view)
+    return out
 
 
 def _gc_stale_local_dirs(root: str, max_age_s: float = 6 * 3600) -> None:
@@ -140,13 +230,14 @@ def _gc_stale_local_dirs(root: str, max_age_s: float = 6 * 3600) -> None:
 
 
 def get_spark(app_name: str = "lagom-kinesis-spark") -> SparkSession:
-    """Session for tests/bench: local[$SPARK_GRAFT_CPUS], AQE on, UTC."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Session for tests/bench: local[cores], AQE on, UTC (machine_defaults
+    sizes cores and driver memory)."""
+    cpus, mem = machine_defaults()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         # local mode = single JVM; driver memory is the only memory knob.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", mem)
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -37,6 +37,7 @@ Structured Streaming:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import random
 import time
@@ -47,7 +48,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lagom_kinesis_spark.session import tune
+from lagom_kinesis_spark.session import child_session, handoff, scratch_root, tune
 
 
 @dataclass(frozen=True)
@@ -116,7 +117,8 @@ class Topic:
     source_path: str | None = None
     source_format: str = "parquet"
     source_options: dict[str, str] = field(default_factory=dict)
-    checkpoint_base: str = "/tmp/lagom_kinesis_spark/checkpoints"
+    #: None: ``checkpoints`` under the engine scratch root
+    checkpoint_base: str | None = None
     #: optional column-level normalization applied after the raw read
     normalize: Callable[[DataFrame], DataFrame] | None = None
 
@@ -126,6 +128,8 @@ class Topic:
         # topics' consumer-group checkpoints (one subscriber resuming
         # from the other's offsets). Same charset rule, same reason.
         _validate_group_id(self.name)
+        if self.checkpoint_base is None:
+            self.checkpoint_base = os.path.join(scratch_root(), "checkpoints")
 
     def stream(self) -> DataFrame:
         tune(self.spark)
@@ -448,7 +452,8 @@ class TaggedProducer:
     journal_schema: str
     topic_name: str
     sink_path: str
-    checkpoint_base: str = "/tmp/lagom_kinesis_spark/producer_checkpoints"
+    #: None: ``producer_checkpoints`` under the engine scratch root
+    checkpoint_base: str | None = None
     partition_key: Callable[[DataFrame], F.Column] | None = None
     #: Optional explicit hash key (KinesisOutboundRecord.scala:5-9 carries
     #: ``explicitHashKey: Option[String]`` — overrides the partition-key
@@ -462,6 +467,10 @@ class TaggedProducer:
     #: journal-order recovery columns (selected from the streaming source's
     #: hidden ``_metadata``, so they survive into the foreachBatch frame).
     _SEQ_COLS = ("__mt", "__fp", "__ri")
+
+    def __post_init__(self) -> None:
+        if self.checkpoint_base is None:
+            self.checkpoint_base = os.path.join(scratch_root(), "producer_checkpoints")
 
     def _serialized(self, df: DataFrame) -> DataFrame:
         data_cols = [c for c in df.columns if c not in self._SEQ_COLS]
@@ -570,7 +579,7 @@ class TopicProducerSpec:
 def register_topic_producers(
     spark: SparkSession,
     specs: list[TopicProducerSpec],
-    checkpoint_base: str = "/tmp/lagom_kinesis_spark/producer_checkpoints",
+    checkpoint_base: str | None = None,
 ) -> dict[str, TaggedProducer]:
     """Wire N topic producers from declarative specs in one sweep
     (ScaladslRegisterTopicProducers.scala:33-101: iterate the service's
@@ -601,23 +610,15 @@ def run_topic_producers(producers: dict[str, TaggedProducer]) -> None:
         p.run()
 
 
-#: Memory-sink tables from prior calls, dropped lazily at the NEXT call —
-#: the previous query's returned table must stay readable until its caller
-#: consumes it, so cleanup is one call behind (same pattern as the registry's
-#: clearCache-at-start). Keeps long suites from accumulating sink rows.
-_prior_sinks: list[str] = []
-
-
 #: Scratch directories handed out by :func:`fresh_scratch_dir`, keyed by
 #: tag; the PREVIOUS dir for a tag is removed when the next one is handed
-#: out (deferred one call, like _prior_sinks above).
+#: out (deferred one call).
 _scratch_dirs: dict[str, str] = {}
 
 
 def fresh_scratch_dir(tag: str) -> str:
-    """Deferred-cleanup scratch-dir manager (VERDICT r5 nit: query
-    functions shouldn't mutate their own module globals for this): create
-    a fresh directory for ``tag`` and delete the previous same-tag one.
+    """Create a fresh scratch directory for ``tag`` under the engine
+    scratch root and delete the previous same-tag one.
     Cleanup is one call behind because callers return DataFrames that read
     the directory LAZILY — it must outlive the call that created it."""
     import shutil
@@ -625,118 +626,54 @@ def fresh_scratch_dir(tag: str) -> str:
     prev = _scratch_dirs.pop(tag, None)
     if prev:
         shutil.rmtree(prev, ignore_errors=True)
-    d = f"/tmp/lagom_kinesis_spark/{tag}/{uuid.uuid4().hex[:12]}"
+    d = os.path.join(scratch_root(), tag, uuid.uuid4().hex[:12])
     os.makedirs(d, exist_ok=True)
     _scratch_dirs[tag] = d
     return d
 
-#: Streaming shuffle/state partitions for the bounded-replay harness. The
-#: number of state-store instances per stateful op == shuffle partitions at
-#: query start; fixture replays are single-batch and small, so 4 keeps state
-#: provider count (and per-query setup) low — measured ~20% off each
-#: harness streaming query vs 8 (r4, custom tiny-source queries). A
-#: production continuous job sizes this to cluster cores like any other
-#: shuffle — which is exactly what the volume hint below does for the
-#: events-fixture replays.
-_STREAM_SHUFFLE_PARTITIONS = "4"
 
-#: One-shot volume-aware override, set by source constructors that know
-#: their input size (streaming_ops.events_stream) and consumed by the next
-#: memory_sink_table run. The r9 A/B showed the pinned 4 serializing the
-#: data work at scale (sf10 session window 2.15 s @4 → 1.09 s @16, sf10
-#: tumbling 0.89 → 0.80 @8) while 8 is also neutral-to-better at sf0.1.
-#: A hint, not a conf: the source constructor runs at plan time, but the
-#: partition count must be set around the sink's start() — and it must
-#: not leak past one run (cleared in memory_sink_table's finally).
-_PARTS_HINT: str | None = None
-
-
-def hint_stream_shuffle_partitions(n: int) -> None:
-    """Declare the shuffle/state partition count for the NEXT
-    memory_sink_table run (volume-aware sources only; see _PARTS_HINT)."""
-    global _PARTS_HINT
-    _PARTS_HINT = str(int(n))
-
-
-def clear_stream_shuffle_hint() -> None:
-    """Drop any pending one-shot partition hint. The public reset for
-    callers outside this module (the registry wrapper clears a hint left
-    by a query that sourced events_stream but sank outside
-    memory_sink_table) — keeping knowledge of _PARTS_HINT's lifecycle in
-    one place instead of letting callers poke the private global
-    (ADVICE r9)."""
-    global _PARTS_HINT
-    _PARTS_HINT = None
-
-
-def memory_sink_table(df: DataFrame, output_mode: str = "append") -> DataFrame:
+def memory_sink_table(
+    df: DataFrame,
+    output_mode: str = "append",
+    parts: int = 4,
+    confs: dict[str, str] | None = None,
+    checkpoint: str | None = None,
+) -> DataFrame:
     """Run a (bounded) streaming DataFrame to completion into a memory sink
-    and return the result table — the harness device for batch-equivalence
-    oracles (SURVEY.md §5.2 layer 2)."""
-    spark = df.sparkSession
-    while _prior_sinks:
-        try:
-            spark.catalog.dropTempView(_prior_sinks.pop())
-        except Exception:
-            pass
-    global _PARTS_HINT
-    name = f"ms_{uuid.uuid4().hex[:12]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", _PARTS_HINT or _STREAM_SHUFFLE_PARTITIONS
+    and return the result table on ``df``'s session — the harness device
+    for batch-equivalence oracles (SURVEY.md §5.2 layer 2).
+
+    ``parts`` is the stateful operators' partition count: 4 keeps state
+    providers (and setup) few for tiny replays (r4: ~20% off vs 8); events
+    replays pass ``streaming_ops.stream_shuffle_partitions``. The stream
+    runs on a :func:`child_session` with ``parts`` and ``confs`` set, never
+    on the caller's conf. The child's sink view is dropped once the result
+    is handed back: the returned frame holds the sink itself."""
+    caller = df.sparkSession
+    child = child_session(
+        caller, {"spark.sql.shuffle.partitions": str(parts), **(confs or {})}
     )
+    name = f"ms_{uuid.uuid4().hex[:12]}"
+    writer = (
+        handoff(df, child).writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
     q = None
-    # Registered BEFORE start(): the memory sink creates the temp view as
-    # soon as the query starts, so a failure in awaitTermination() (batch
-    # fails mid-run) must still leave the name in the cleanup list — the
-    # old append-after-try leaked the view (and its driver-held rows) on
-    # every failed streaming query. dropTempView on a name whose start()
-    # never registered a view is a no-op under the except above.
-    _prior_sinks.append(name)
     try:
-        # start() itself can raise (e.g. append mode on an un-watermarked
-        # aggregation) — it must sit INSIDE the try or the session-wide
-        # shuffle-partition override leaks to every later batch query.
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = writer.start()
         q.awaitTermination()
+        return handoff(child.table(name), caller)
     finally:
         if q is not None:
             q.stop()
-        _PARTS_HINT = None
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        # bench.py opts out (SPARK_GRAFT_STREAM_UNLOAD=0) and does NOT
-        # unload at all for the bench process: stop() costs ~70 ms
-        # (measured r8) and would otherwise land inside every timed
-        # streaming run, and the unload's maintenance-machinery restart
-        # lands in the next one. Provider growth over one bench run (a
-        # handful of streaming entries × ≤7 runs × 4 partitions of
-        # sf0.1-sized state) is bounded and tiny (bench.py:84). Gate/
-        # pytest sweeps keep the per-call unload — that's what bounds
-        # provider growth across a 300-query session.
-        import os as _os
-
-        if _os.environ.get("SPARK_GRAFT_STREAM_UNLOAD") != "0":
-            _unload_state_stores(spark)
-    return spark.table(name)
-
-
-def _unload_state_stores(spark: SparkSession) -> None:
-    """Unload HDFS-backed state-store providers after a bounded replay.
-
-    Each streaming query loads one provider per (stateful op × partition)
-    into a process-global registry that holds the state maps in memory;
-    short-lived harness queries never reuse them (fresh checkpoint each
-    run), so without an explicit stop a long suite accumulates hundreds of
-    providers — unbounded executor-memory growth. Maintenance threads
-    restart lazily on the next streaming query, so this is safe to call
-    between queries."""
-    try:
-        spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()  # noqa: SLF001
-    except Exception:
-        pass  # diagnostic-only cleanup — never fail a query over it
+        child.catalog.dropTempView(name)
+        # Unload the state-store providers: each run loads one per (stateful
+        # op x partition) into a process-global registry and never reuses
+        # it (fresh checkpoint), so a long suite would pile up hundreds.
+        # Maintenance threads restart lazily on the next stream.
+        with contextlib.suppress(Exception):
+            child._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()  # noqa: SLF001

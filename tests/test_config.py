@@ -176,6 +176,8 @@ def test_bench_essential_line_fits_tail_capture():
     # contract fields (driver protocol) all present on the compact line
     assert {"metric", "value", "unit", "queries", "sf"} <= set(rec)
     assert rec["queries"] == times and rec["unit"] == "sec"
+    # the row count keeps totals comparable across suite changes
+    assert rec["suite_rows"] == len(bench.HEADLINE)
 
 
 def test_bench_witness_row_pinned():
@@ -213,3 +215,60 @@ def test_bench_task_counts_telemetry(spark):
     out = bench._task_counts(spark, "tc-test")
     assert out.get("tasks", 0) > 0 and out.get("stages", 0) > 0
     assert bench._task_counts(spark, "no-such-group") in ({}, {"tasks": 0, "stages": 0})
+
+
+# --- engine defaults and session discipline ---------------------------------
+
+
+def test_no_conf_mutation_outside_session_module():
+    """Operators never set a conf on a caller's session: conf-scoped runs go
+    through session.child_session, the only module that sets confs."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "lagom_kinesis_spark"
+    hits = [
+        f"{p.relative_to(root)}:{n}"
+        for p in sorted(root.rglob("*.py"))
+        if p != root / "session.py"
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if ".conf.set(" in line or ".conf.unset(" in line
+    ]
+    assert hits == []
+
+
+def test_machine_defaults_follow_the_machine(monkeypatch):
+    """With neither variable set, a local session takes the usable cores
+    and a quarter of the machine's memory; a set variable wins."""
+    import os
+
+    from lagom_kinesis_spark.session import machine_defaults
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    cpus, mem = machine_defaults()
+    assert cpus == str(len(os.sched_getaffinity(0)))
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    assert mem == f"{phys_mb // 4}m"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "2g")
+    assert machine_defaults() == ("3", "2g")
+
+
+def test_scratch_lands_under_tmpdir(monkeypatch, tmp_path):
+    """Engine scratch follows TMPDIR, resolved per call; with TMPDIR unset
+    it stays at /tmp/lagom_kinesis_spark."""
+    import tempfile
+
+    from lagom_kinesis_spark.catalog import stream_dir
+    from lagom_kinesis_spark.session import scratch_root
+    from lagom_kinesis_spark.streaming.topics import fresh_scratch_dir
+    from tests.conftest import SF_DIR
+
+    for k in ("TMPDIR", "TEMP", "TMP"):
+        monkeypatch.delenv(k, raising=False)
+    monkeypatch.setattr(tempfile, "tempdir", None)
+    assert scratch_root() == "/tmp/lagom_kinesis_spark"
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", None)
+    assert fresh_scratch_dir("tmpdir_probe").startswith(str(tmp_path))
+    assert stream_dir(SF_DIR, "events").startswith(str(tmp_path))

@@ -856,6 +856,56 @@ def test_shingle_hash_proxy_is_injective_on_fixture(spark):
     )
 
 
+def test_shingle_proxy_matches_string_shingles_on_sample(spark):
+    """dedup_jaccard_pairs audits the banded/LSH paths but compares
+    xxhash64 shingle proxies, the same assumption as the paths it audits.
+    This check does not share it: on a sample (every tenth document), each
+    pair's Jaccard is recomputed over the shingle STRINGS and must equal
+    the proxy's value, and the query's rows inside the sample must be
+    exactly the string-based pairs at >= 0.3."""
+    from lagom_kinesis_spark.functions import r6
+    from lagom_kinesis_spark.operators.text import (
+        jaccard,
+        shingle_hash_proxy,
+        shingles,
+    )
+
+    in_sample = F.col("doc_id") % 10 == 0
+    sub = (
+        load(spark, SF_DIR, "documents")
+        .filter(in_sample)
+        .select("doc_id", shingles(tokens("text")).alias("sh"))
+        .withColumn("hp", shingle_hash_proxy(F.col("sh")))
+    )
+    a = sub.select(*(F.col(c).alias(f"{c}_a") for c in sub.columns))
+    b = sub.select(*(F.col(c).alias(f"{c}_b") for c in sub.columns))
+    pairs = a.join(b, F.col("doc_id_a") < F.col("doc_id_b")).select(
+        F.col("doc_id_a").alias("id_a"),
+        F.col("doc_id_b").alias("id_b"),
+        jaccard(F.col("sh_a"), F.col("sh_b")).alias("jac_str"),
+        jaccard(F.col("hp_a"), F.col("hp_b")).alias("jac_proxy"),
+    )
+    rows = pairs.collect()
+    assert len(rows) > 100, len(rows)
+    differ = [r for r in rows if r.jac_str != r.jac_proxy]
+    assert differ == [], differ[:5]
+    want = {
+        (r.id_a, r.id_b, r.jac)
+        for r in pairs.filter(F.col("jac_str") >= 0.3)
+        .select("id_a", "id_b", r6(F.col("jac_str")).alias("jac"))
+        .collect()
+    }
+    got = {
+        (r.id_a, r.id_b, r.jac)
+        for r in QS["dedup_jaccard_pairs"]
+        .fn(spark, SF_DIR)
+        .filter((F.col("id_a") % 10 == 0) & (F.col("id_b") % 10 == 0))
+        .collect()
+    }
+    assert want, "no qualifying pair in the sample"
+    assert got == want
+
+
 def test_connected_components_iterations_plan_one_shuffle(spark):
     """r12 (cont.): the per-iteration loop body must plan exactly ONE
     shuffle — the dst-side neighbor-min aggregation. The edges/labels
@@ -916,20 +966,32 @@ def test_connected_components_iterations_plan_one_shuffle(spark):
         assert "BroadcastExchange" not in plan
 
 
-def test_connected_components_never_deadapts_caller_session(spark):
-    """r13 (VERDICT r12 #3): the CC loop disables AQE on a CLONED session
-    only — the r12 implementation flipped the SHARED session's conf for
-    the loop's duration, silently de-adapting every concurrent query on
+def test_connected_components_never_deadapts_caller_session(spark, monkeypatch):
+    """r13 (VERDICT r12 #3): the CC loop disables AQE on its own child
+    session only — the r12 implementation flipped the SHARED session's conf
+    for the loop's duration, silently de-adapting every concurrent query on
     the same SparkSession and letting two concurrent CC calls race the
     restore. Proof: a sampler thread reads the caller session's AQE conf
     AND plans a shuffle query on it WHILE a multi-round CC iterates; every
     sample must read adaptive. A 10-chain forces ~10 min-propagation
     rounds (min labels travel one hop per round), so the sampler gets many
     mid-loop shots; the sample-count assert guards against a trivially
-    empty overlap."""
+    empty overlap. A second call with the same caller conf must reuse the
+    first call's loop session (a session per call leaks a listener per
+    stream and a SessionState per call)."""
     import threading
 
+    from lagom_kinesis_spark.operators import components
     from lagom_kinesis_spark.operators.components import connected_components
+
+    loops: list = []
+    real_child = components.child_session
+
+    def spy_child(caller, overrides=None):
+        loops.append(real_child(caller, overrides))
+        return loops[-1]
+
+    monkeypatch.setattr(components, "child_session", spy_child)
 
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     conf_samples: list[str] = []
@@ -967,6 +1029,12 @@ def test_connected_components_never_deadapts_caller_session(spark):
     leftover = [
         t.name
         for t in spark.catalog.listTables("global_temp")
-        if t.name.startswith("cc_")
+        if t.name.startswith("handoff_")
     ]
     assert leftover == [], leftover
+    # same caller conf -> the same loop session, with AQE off only there
+    pairs = spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long")
+    assert connected_components(pairs).count() == 4
+    assert len(loops) == 2 and loops[0] is loops[1]
+    assert loops[0] is not spark
+    assert loops[0].conf.get("spark.sql.adaptive.enabled") == "false"

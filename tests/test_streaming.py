@@ -558,25 +558,149 @@ def test_stream_shuffle_partitions_volume_rule(monkeypatch):
         assert so.stream_shuffle_partitions("/any") == want, rows
 
 
-def test_parts_hint_consumed_once(spark):
-    """The one-shot hint must apply to exactly the next memory_sink_table
-    run and never leak (a stale hint would repartition an unrelated tiny
-    custom-source query)."""
-    from lagom_kinesis_spark.streaming import topics
+_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+_ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-    topics.hint_stream_shuffle_partitions(11)
-    assert topics._PARTS_HINT == "11"
-    df = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", "1")
-        .load()
-        .groupBy("value")
+
+def _region_counts(spark):
+    """A tiny stateful stream: the 5-row region fixture, one batch."""
+    from lagom_kinesis_spark.catalog import stream_dir
+    from tests.conftest import SF_DIR
+
+    return (
+        spark.readStream.schema("r_regionkey int, r_name string")
+        .parquet(stream_dir(SF_DIR, "region"))
+        .groupBy("r_name")
         .count()
     )
-    # run a trivial bounded query through the sink; rate + availableNow
-    # terminates after one batch
-    topics.memory_sink_table(df, "complete")
-    assert topics._PARTS_HINT is None
+
+
+def _sink_with_progress(spark, df, parts, confs=None):
+    """memory_sink_table(df, "complete", parts, confs) plus the stateful
+    operators of its progress events, read by a listener on the child
+    session the sink runs on (a listener only sees its own session's
+    queries, so one on the caller would see nothing)."""
+    import json
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from lagom_kinesis_spark.session import child_session
+    from lagom_kinesis_spark.streaming.topics import memory_sink_table
+
+    class Ops(StreamingQueryListener):
+        def __init__(self):
+            self.ops: list[dict] = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.ops += json.loads(event.progress.json)["stateOperators"]
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    child = child_session(
+        spark, {"spark.sql.shuffle.partitions": str(parts), **(confs or {})}
+    )
+    rec = Ops()
+    child.streams.addListener(rec)
+    try:
+        out = memory_sink_table(df, "complete", parts=parts, confs=confs)
+        deadline = time.time() + 30
+        while not rec.ops and time.time() < deadline:
+            time.sleep(0.1)  # progress events arrive asynchronously
+    finally:
+        child.streams.removeListener(rec)
+    return child, out, rec.ops
+
+
+def test_sink_partitions_reach_the_stateful_operator(spark):
+    """The partition count passed to memory_sink_table is the stateful
+    operator's numShufflePartitions, and the caller's own count stays."""
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    _, out, ops = _sink_with_progress(spark, _region_counts(spark), 11)
+    assert ops and {op["numShufflePartitions"] for op in ops} == {11}, ops
+    assert out.count() == 5 and out.sparkSession is spark
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_sink_leaves_concurrent_caller_queries_alone(spark):
+    """A sampler thread reads the caller's confs and plans a shuffle query
+    on the caller WHILE a sink runs with 11 partitions on the RocksDB
+    provider: every sample must read the caller's own values, and every
+    batch plan must keep the caller's partition count."""
+    import re
+    import threading
+
+    from lagom_kinesis_spark.session import child_session
+
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    provider = spark.conf.get(_PROVIDER, None)
+    assert parts != "11" and provider != _ROCKSDB
+    child = child_session(
+        spark, {"spark.sql.shuffle.partitions": "11", _PROVIDER: _ROCKSDB}
+    )
+    samples: list[tuple] = []
+    stop = threading.Event()
+
+    def sampler() -> None:
+        while not stop.is_set():
+            plan = (
+                spark.range(1000)
+                .groupBy((F.col("id") % 7).alias("k"))
+                .count()
+                ._jdf.queryExecution()
+                .executedPlan()
+                .toString()
+            )
+            samples.append(
+                (
+                    spark.conf.get("spark.sql.shuffle.partitions"),
+                    spark.conf.get(_PROVIDER, None),
+                    re.findall(r"hashpartitioning\([^)]*, (\d+)\)", plan),
+                    bool(child.streams.active),
+                )
+            )
+
+    t = threading.Thread(target=sampler, daemon=True)
+    t.start()
+    try:
+        _, out, ops = _sink_with_progress(
+            spark, _region_counts(spark), 11, {_PROVIDER: _ROCKSDB}
+        )
+    finally:
+        stop.set()
+        t.join(timeout=30)
+    assert {op["numShufflePartitions"] for op in ops} == {11}, ops
+    assert any(k.startswith("rocksdb") for k in ops[0]["customMetrics"]), ops
+    assert out.count() == 5
+    assert any(s[3] for s in samples), "no sample overlapped the running sink"
+    for got_parts, got_provider, plan_parts, _ in samples:
+        assert (got_parts, got_provider) == (parts, provider)
+        assert plan_parts == [parts], plan_parts
+
+
+def test_caller_conf_change_reaches_the_next_child(spark):
+    """A conf the caller changes between two sink calls reaches the second
+    call's child session: the second run really uses the caller's new
+    state-store provider (RocksDB's own metrics in its progress)."""
+    prev = spark.conf.get(_PROVIDER, None)
+    first, _, ops1 = _sink_with_progress(spark, _region_counts(spark), 4)
+    spark.conf.set(_PROVIDER, _ROCKSDB)
+    try:
+        second, _, ops2 = _sink_with_progress(spark, _region_counts(spark), 4)
+    finally:
+        if prev is None:
+            spark.conf.unset(_PROVIDER)
+        else:
+            spark.conf.set(_PROVIDER, prev)
+    assert second is not first
+    assert not any(k.startswith("rocksdb") for k in ops1[0]["customMetrics"])
+    assert any(k.startswith("rocksdb") for k in ops2[0]["customMetrics"])
 
 
 def test_bench_stream_steady_state_contract(spark):
